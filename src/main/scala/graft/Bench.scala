@@ -652,14 +652,17 @@ object Bench {
     // stage-latency-bound queries read ≈1 and it concluded (wrongly) that
     // $SPARK_GRAFT_CPUS was ignored — print the effective parallelism so
     // the honoring is falsifiable from the outside.
-    val master = spark.sparkContext.master
+    // Path and master URL go through Verify's JSON escaper: a quote or
+    // backslash in either would otherwise break the line's JSON.
+    val sfJson = Verify.q(sfDir)
+    val masterJson = Verify.q(spark.sparkContext.master)
     val compact =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$headlineTimes,"sf":"$sfDir","reps":$reps,"cpus":$cpus,"master":"$master","errors":$errCount,"floor_regressions":${regressions.size},"floor_regressions_cpu_adj":${adjRegressions.size},"isolated_recheck":$isoJson,"cpu_ref_sec":${sec(cpuRef)},"cpu_ref_mt_sec":${sec(cpuRefMt)},"mem_ref_sec":${sec(memRef)},"mem_ref_mt_sec":${sec(memRefMt)},"stage_ref_sec":${sec(stageRef)},"isolated_stage_ref_sec":${sec(isolatedStageRef)},"isolated_cpu_ref_sec":${sec(isolatedCpuRef)},"cpu_ref_during":$duringJson,"mem_ref_during":$memDuringJson,"isolated_mem_ref_during":$isolatedMemDuring,"quiet_gate":$quietGateJson}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$headlineTimes,"sf":$sfJson,"reps":$reps,"cpus":$cpus,"master":$masterJson,"errors":$errCount,"floor_regressions":${regressions.size},"floor_regressions_cpu_adj":${adjRegressions.size},"isolated_recheck":$isoJson,"cpu_ref_sec":${sec(cpuRef)},"cpu_ref_mt_sec":${sec(cpuRefMt)},"mem_ref_sec":${sec(memRef)},"mem_ref_mt_sec":${sec(memRefMt)},"stage_ref_sec":${sec(stageRef)},"isolated_stage_ref_sec":${sec(isolatedStageRef)},"isolated_cpu_ref_sec":${sec(isolatedCpuRef)},"cpu_ref_during":$duringJson,"mem_ref_during":$memDuringJson,"isolated_mem_ref_during":$isolatedMemDuring,"quiet_gate":$quietGateJson}"""
     // task_metrics rides only the detail files: ~190 queries x 8 fields
     // would reproduce the oversized-line capture failure the compact
     // headline subset exists to prevent.
     val detail =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":${fmt(results)},"sf":"$sfDir","reps":$reps,"cpus":$cpus,"master":"$master","errors":$errCount,"floor_regressions":${regressions.size},"floor_regressions_cpu_adj":${adjRegressions.size},"isolated_recheck":$isoJson,"cpu_ref_sec":${sec(cpuRef)},"cpu_ref_mt_sec":${sec(cpuRefMt)},"mem_ref_sec":${sec(memRef)},"mem_ref_mt_sec":${sec(memRefMt)},"stage_ref_sec":${sec(stageRef)},"isolated_stage_ref_sec":${sec(isolatedStageRef)},"isolated_cpu_ref_sec":${sec(isolatedCpuRef)},"cpu_ref_during":$duringJson,"mem_ref_during":$memDuringJson,"isolated_mem_ref_during":$isolatedMemDuring,"quiet_gate":$quietGateJson,"task_metrics":$taskMetricsJson}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":${fmt(results)},"sf":$sfJson,"reps":$reps,"cpus":$cpus,"master":$masterJson,"errors":$errCount,"floor_regressions":${regressions.size},"floor_regressions_cpu_adj":${adjRegressions.size},"isolated_recheck":$isoJson,"cpu_ref_sec":${sec(cpuRef)},"cpu_ref_mt_sec":${sec(cpuRefMt)},"mem_ref_sec":${sec(memRef)},"mem_ref_mt_sec":${sec(memRefMt)},"stage_ref_sec":${sec(stageRef)},"isolated_stage_ref_sec":${sec(isolatedStageRef)},"isolated_cpu_ref_sec":${sec(isolatedCpuRef)},"cpu_ref_during":$duringJson,"mem_ref_during":$memDuringJson,"isolated_mem_ref_during":$isolatedMemDuring,"quiet_gate":$quietGateJson,"task_metrics":$taskMetricsJson}"""
     // Only unfiltered runs AT THE CANONICAL SF may rewrite the committed
     // canonical detail — a filtered dev run would silently replace the
     // 193-query record with its subset, and an unfiltered run at another

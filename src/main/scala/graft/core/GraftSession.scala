@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
   *  - parquet nanosAsLong: the `events` table stores TIMESTAMP(NANOS),
   *    which Spark's parquet reader rejects; we read exact int64 nanos and
   *    derive timestamps explicitly (see Tables.events).
+  *  - block codec and AQE's initial shuffle width are left to Spark (lz4,
+  *    unset). Both were measured on the sf100 d11 pair shuffle (BASELINE.md
+  *    round 12): an initial width of 256 took its 35 GiB sorter spill to
+  *    zero at flat wall; zstd wrote 28% less shuffle but cost +37% wall.
+  *    Whale runs that want the wider start pass
+  *    `-Dspark.sql.adaptive.coalescePartitions.initialPartitionNum=256`.
   */
 object GraftSession {
   /** SPARK_GRAFT_OFFHEAP_GB, validated: a non-negative integer GB count
@@ -29,60 +35,8 @@ object GraftSession {
       s"SPARK_GRAFT_OFFHEAP_GB must be a non-negative integer GB count, got '$raw'"))
   }
 
-  /** SPARK_GRAFT_INITIAL_PARTS (default 0 = off): AQE pre-coalesce shuffle
-    * width — "on a real cluster this is overridden (AQE coalesces down from
-    * a high initial)", made settable. Round-12 sf100 measurements
-    * (BASELINE.md r12): at 256 the d11 pair aggregation kept its 12-stage
-    * plan, partial aggregation intact, and its 35 GiB sorter spill dropped
-    * to ZERO at flat wall — this is the whale lever that works. The two
-    * alternatives both measured worse: an explicit repartition-on-keys at
-    * the aggregation bypasses map-side combine (raw pair stream overran
-    * the disk outright), and combining this knob with zstd shuffle
-    * compression reshaped AQE's decisions (12→19 stages, +25 GiB staged
-    * re-reads, +37% wall). Single-box caveat is DISK, not the knob: the
-    * two big stages' files coexist at ~the box's free space, so run one
-    * big-shuffle query per JVM with tmp corpora pruned. */
-  private lazy val initialParts: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS", "0").trim
-    val parsed = scala.util.Try(raw.toInt).toOption.filter(_ >= 0)
-    parsed.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_INITIAL_PARTS must be a non-negative integer partition count, got '$raw'"))
-  }
-
-  /** SPARK_GRAFT_IO_CODEC (default unset = Spark's lz4): shuffle/spill/
-    * broadcast block codec. The second whale-posture disk lever: the sf100
-    * d11 pair shuffle writes ~45 GiB lz4 on a box with ~76 GiB free, so the
-    * two stages' files coexisting sat at the budget edge and ENOSPC task
-    * retries fired (round 12). zstd trades a little CPU for a markedly
-    * smaller on-disk shuffle — the standard posture for shuffle-heavy
-    * production jobs since Spark 3. Validated against the codecs Spark
-    * ships so a typo fails at session build, not mid-stage. */
-  private lazy val ioCodec: Option[String] = {
-    val known = Set("lz4", "zstd", "snappy", "lzf")
-    sys.env.get("SPARK_GRAFT_IO_CODEC").map(_.trim).filter(_.nonEmpty).map { c =>
-      require(known.contains(c),
-        s"SPARK_GRAFT_IO_CODEC must be one of ${known.toSeq.sorted.mkString(", ")}, got '$c'")
-      c
-    }
-  }
-
-  /** SPARK_GRAFT_BYPASS_THRESHOLD (default 0): the shuffle writer selection
-    * threshold (spark.shuffle.sort.bypassMergeThreshold). 0 = serialized
-    * (Unsafe) writer everywhere — the round-14 measured default on this
-    * host (one spill file + index per map task vs one FILE per reducer).
-    * Parameterised (round-15, VERDICT r14 item 6) so the sort-tax on
-    * big-sort queries (a22/a16/m25 pay +0.2-0.4 s at sf0.1) can be A/B'd at
-    * any scale without a code swap; the measured scaling of the tax is
-    * recorded in OPTIMIZATION_r15.md / BASELINE.md. */
-  private lazy val bypassThreshold: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0").trim
-    val parsed = scala.util.Try(raw.toInt).toOption.filter(_ >= 0)
-    parsed.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_BYPASS_THRESHOLD must be a non-negative integer, got '$raw'"))
-  }
-
-  def builder(cores: Int): SparkSession.Builder = {
-    val base0 = SparkSession.builder()
+  def builder(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -156,14 +110,11 @@ object GraftSession {
       // shuffles take the serialized (Unsafe) writer: ONE spill file +
       // index per map task regardless of reducer count. Large shuffles
       // already used it. Per-partition-count-independent, results
-      // untouched (routing only).
-      .config("spark.shuffle.sort.bypassMergeThreshold", bypassThreshold.toString)
-    val base = ioCodec.fold(base0)(c => base0.config("spark.io.compression.codec", c))
-    if (initialParts > 0)
-      base.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts.toString)
-    else base
-  }
+      // untouched (routing only). The sort tax this costs big-sort queries
+      // at sf0.1 (a22/a16/m25, +0.2-0.4 s) inverts one decade up: at sf1,
+      // threshold 0 ran 20-30% faster than 200 on the same queries
+      // (BASELINE.md "Round 15: the unsafe-writer sort tax INVERTS").
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
 
   def local(cores: Int = 4): SparkSession = {
     val spark = builder(cores).getOrCreate()

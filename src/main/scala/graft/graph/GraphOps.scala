@@ -182,9 +182,13 @@ object GraphOps {
     // fuse into ONE job per round (2 → 1). Dataset.observe cannot do this:
     // the CollectMetrics node would sit behind the localCheckpoint
     // boundary, whose materialization is not a tracked QueryExecution, so
-    // the observation never fires. Emptiness-by-accumulator is exact under
-    // recompute/retry inflation: a bump can only come from a task that saw
-    // a row, and a truly empty contraction never produces one.
+    // the observation never fires. Emptiness-by-accumulator is one-sided
+    // under recompute/retry inflation: a bump can only come from a task
+    // that saw a row, so a truly empty contraction never reads non-empty
+    // and a live one is never declared done. The failure direction is
+    // performance only — an eviction-driven recompute of an earlier
+    // round's contraction can bump after the snapshot, keeping the
+    // contraction join alive for extra rounds, never changing a label.
     val contractedRows = spark.sparkContext.longAccumulator("cc_contracted_rows")
     def bump(c: org.apache.spark.sql.Column) =
       graft.functions.RowTouch.touch(c, contractedRows)

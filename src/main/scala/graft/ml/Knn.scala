@@ -15,8 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * Probes that fail at ring 1 retry at ring 2 ONLY (the failed subset);
   * stragglers after ring 2 take the probes×corpus fallback scan.
   *
-  * Why the escalation exists (GeoScaleEvidence, round 6): fallback volume
-  * is density-sensitive — at E[neighbors within one cell] ≈ k the 3×3
+  * Why the escalation exists (GEOSCALE_r06.json; BASELINE.md "Geo scale
+  * evidence", round 6): fallback volume is density-sensitive — at
+  * E[neighbors within one cell] ≈ k the 3×3
   * exactness test fails for ~15% of probes, and the one-shot fallback scan
   * then window-sorts |fallback|×n rows (measured: 747 s at 750k points,
   * 10.6k fallbacks — the suite's only 100×-scale killer). Ring 2 covers

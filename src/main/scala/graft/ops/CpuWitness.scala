@@ -1,7 +1,8 @@
 package graft.ops
 
 /** Machine-speed witness shared by every wall-clock-bearing harness
-  * (Bench, GeoScaleEvidence, StreamScaleEvidence).
+  * (Bench and the harness records it headed: GEOSCALE_r06.json,
+  * STREAMSCALE_r06.json, WHALESCALE_r*.json).
   *
   * VM-host noise windows cut effective CPU speed ~1.5x for hours at a
   * time (BASELINE.md "Machine-speed witness": 21 unrelated queries flagged

@@ -98,10 +98,7 @@ object SimHashWide {
     full.bitwiseAND(lit((1L << width) - 1))
   }
 
-  /** Signature Hamming distance (Σ bit_count(xor) over words) — public so
-    * harnesses can split candidate generation from the verify filter. */
-  def hamming(a: Column, b: Column, words: Int): Column = hammingCol(a, b, words)
-
+  /** Signature Hamming distance: Σ bit_count(xor) over words. */
   private def hammingCol(a: Column, b: Column, words: Int): Column =
     (0 until words).map(w =>
       bit_count(element_at(a, w + 1).bitwiseXOR(element_at(b, w + 1))))

@@ -441,8 +441,8 @@ object JoinQueries extends QueryCatalog {
     // within eps, as a standalone op (the candidate-generation core of
     // DBSCAN/LISA exposed directly). The op's output is an AGGREGATE over
     // the pairs, so spatial.DistanceBand never enumerates them: coincident
-    // points collapse to weighted locations first (GeoScaleEvidence
-    // measured the naive id-level shape at 4.6·10⁸ pairs on its 10×
+    // points collapse to weighted locations first (GEOSCALE_r06.json
+    // records the naive id-level shape at 4.6·10⁸ pairs on its 10×
     // coincident-mass corpus — the collapsed plan folds the same aggregate
     // over ~15k location pairs), then an eps-cell 3×3 grid equi-join with
     // exact recheck bounds cross-location work by local DISTINCT-location

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Work is therefore quadratic in DISTINCT locations per cell (guarded by
   * ops.GridGuard), never in coincident mass: a geocoding default with 10⁶
   * rows at one coordinate is ONE location row, where the naive id-level join
-  * enumerates ~5·10¹¹ pairs (GeoScaleEvidence measured the naive shape at
+  * enumerates ~5·10¹¹ pairs (GEOSCALE_r06.json records the naive shape at
   * 4.6·10⁸ pairs already at its 10× coincident corpus).
   *
   * Grid blocking is the standard one: cell width = ε, each location probes

@@ -104,51 +104,32 @@ object EventsAnomaly {
     * so inheriting local[32]'s default was pure overhead at this state
     * size. The rule sizes partitions at one per ~32 MB of source bytes
     * (clamped to [4, 1024]) — sf0.1's ~4 MB stream runs at 4, a
-    * terabyte-scale stream derives hundreds, and SPARK_GRAFT_STREAM_PARTS
-    * overrides for operators that know their state volume. Results are
-    * partition-count-independent (hash routing only), which the 6
-    * streaming oracles re-verify. */
-  private def streamShuffleParts(spark: SparkSession, parquetPath: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.trim.toInt) match {
-      case Some(n) =>
-        require(n > 0, s"SPARK_GRAFT_STREAM_PARTS must be positive, got $n")
-        n
-      case None =>
-        // Hadoop FS sizing (round-15, ADVICE r14): java.io.File reads ~0
-        // bytes for any non-local URI (hdfs://, s3a://) or nested/
-        // partitioned layout (listFiles is non-recursive) and would
-        // silently clamp a terabyte stream to 4 state partitions on
-        // cluster storage. getContentSummary walks the tree through
-        // whatever filesystem the path names; on failure fall back to the
-        // 4-partition floor LOUDLY rather than silently.
-        val bytes =
-          try {
-            val path = new org.apache.hadoop.fs.Path(parquetPath)
-            val conf = spark.sparkContext.hadoopConfiguration
-            path.getFileSystem(conf).getContentSummary(path).getLength
-          } catch {
-            case e: Exception =>
-              System.err.println(
-                s"[streaming] source sizing failed for $parquetPath (${e.getMessage}) — " +
-                  "defaulting to the 4-partition state floor; set SPARK_GRAFT_STREAM_PARTS to override")
-              0L
-          }
-        val parts = math.min(1024L, math.max(4L, bytes / (32L << 20))).toInt
-        System.err.println(s"[streaming] $parquetPath: $bytes source bytes -> $parts state partitions")
-        parts
-    }
-
-  /** Run `body` (a streaming start/await bracket) with the session's
-    * shuffle-partition conf pinned to [[streamShuffleParts]], restoring the
-    * caller's value after. A NEW streaming checkpoint pins its state
-    * partition count from this conf at first-batch planning, so the bracket
-    * only needs to span query start → termination; the batch rollups over
-    * the sink run at the session's normal width. */
-  private def withStreamParts[T](spark: SparkSession, parquetPath: String)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, streamShuffleParts(spark, parquetPath).toString)
-    try body finally spark.conf.set(key, prev)
+    * terabyte-scale stream derives hundreds. Results are partition-count-
+    * independent (hash routing only), which the 6 streaming oracles
+    * re-verify.
+    *
+    * Sizing goes through the Hadoop FS (round-15, ADVICE r14): java.io.File
+    * reads ~0 bytes for any non-local URI (hdfs://, s3a://) or nested/
+    * partitioned layout (listFiles is non-recursive) and would silently
+    * clamp a terabyte stream to 4 state partitions on cluster storage.
+    * getContentSummary walks the tree through whatever filesystem the path
+    * names. A sizing failure stops the replay with the path and cause: a
+    * transient remote-FS error must not quietly become the 4-partition
+    * floor. */
+  private def streamShuffleParts(spark: SparkSession, parquetPath: String): Int = {
+    val bytes =
+      try {
+        val path = new org.apache.hadoop.fs.Path(parquetPath)
+        val conf = spark.sparkContext.hadoopConfiguration
+        path.getFileSystem(conf).getContentSummary(path).getLength
+      } catch {
+        case e: Exception =>
+          throw new IllegalStateException(
+            s"streaming source sizing failed for $parquetPath: ${e.getMessage}", e)
+      }
+    val parts = math.min(1024L, math.max(4L, bytes / (32L << 20))).toInt
+    System.err.println(s"[streaming] $parquetPath: $bytes source bytes -> $parts state partitions")
+    parts
   }
 
   /** RAM-backed checkpoint dir for a bounded replay, when the host has one.
@@ -157,9 +138,10 @@ object EventsAnomaly {
     * the checkpoint is discarded the moment the query terminates — so its
     * checkpoint needs none of the durability a production job's does, yet
     * the default temp location puts it on real disk, where every state
-    * store delta + offset/commit log fsyncs. Measured (StreamProbe, sf0.1,
-    * 32 state partitions): disk-synced checkpoints cost ~9 ms per state
-    * partition per batch of pure sync latency — ~0.3 s of the w10 replay —
+    * store delta + offset/commit log fsyncs. Measured (BASELINE.md
+    * "w10_stream_hourly: profiled anatomy", sf0.1, 32 state partitions):
+    * disk-synced checkpoints cost ~9 ms per state partition per batch of
+    * pure sync latency — ~0.3 s of the w10 replay —
     * and that latency moves with host windows, which is exactly the noise
     * a correctness/bench harness should not carry. Production jobs keep
     * durable checkpoints; match durability to what the artifact needs. */
@@ -207,30 +189,28 @@ object EventsAnomaly {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Start `dsw` with an ephemeral checkpoint (when available), await the
-    * bounded run, and clean the checkpoint up — shared tail of the three
-    * replay variants. `checkpointDir` overrides the default ephemeral
-    * (shm-backed) location; StreamProbe uses it to bisect checkpoint IO
-    * (disk vs shm) — without the override every probe arm would silently
-    * measure the shm default.
+  /** Start `dsw` (with `ckpt` as its checkpoint when given), await the
+    * bounded run, and delete the checkpoint — the shared tail of every
+    * replay variant. Each replay owns a fresh throwaway checkpoint, so
+    * every run is a full replay.
     *
-    * Checkpoint ownership (ADVICE r9): only the INTERNALLY-created
-    * ephemeral checkpoint is deleted here. A caller-supplied
-    * `checkpointDir` is the caller's to clean (StreamProbe removes its
-    * throwaway disk arm itself) — deleting it here would destroy a
-    * durable checkpoint location a future caller passes in. Note a
-    * bounded AvailableNow replay over a REUSED checkpoint resumes past
-    * already-processed data, so callers passing a dir must clear it
-    * between runs if they want a full replay. */
-  private def runBounded(spark: SparkSession,
+    * The session's shuffle-partition conf is pinned to
+    * [[streamShuffleParts]] for the run and restored after. A NEW
+    * streaming checkpoint pins its state partition count from this conf at
+    * first-batch planning, so the pin only needs to span query start →
+    * termination; the batch rollups over the sink run at the session's
+    * normal width. */
+  private def runBounded(spark: SparkSession, parquetPath: String,
       dsw: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-      name: String, checkpointDir: Option[String]): DataFrame = {
-    val internal = checkpointDir.isEmpty
-    val ckpt = checkpointDir.orElse(ephemeralCheckpoint())
-    val q = ckpt.fold(dsw)(dsw.option("checkpointLocation", _)).start()
-    try q.awaitTermination()
-    finally if (internal) ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
-    spark.table(name)
+      ckpt: Option[String]): Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, streamShuffleParts(spark, parquetPath).toString)
+    try {
+      val q = ckpt.fold(dsw)(dsw.option("checkpointLocation", _)).start()
+      try q.awaitTermination()
+      finally ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
+    } finally spark.conf.set(key, prev)
   }
 
   private def boundedSource(spark: SparkSession, parquetPath: String): DataFrame = {
@@ -257,15 +237,15 @@ object EventsAnomaly {
     * [[replayBoundedLarge]]; data-proportional append emissions use the
     * file-sink variants below. */
   def replayBounded(spark: SparkSession, parquetPath: String,
-      transform: DataFrame => DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
+      transform: DataFrame => DataFrame): DataFrame = {
     val name = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamParts(spark, parquetPath) {
-      runBounded(spark, transform(boundedSource(spark, parquetPath)).writeStream
+    runBounded(spark, parquetPath,
+      transform(boundedSource(spark, parquetPath)).writeStream
         .format("memory").queryName(name)
         .outputMode("complete")
-        .trigger(Trigger.AvailableNow()), name, checkpointDir)
-    }
+        .trigger(Trigger.AvailableNow()),
+      ephemeralCheckpoint())
+    spark.table(name)
   }
 
   /** Complete-mode replay for DATA-PROPORTIONAL aggregates (session
@@ -281,25 +261,16 @@ object EventsAnomaly {
     val out = sinkDir(spark)
     val write: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => batch.write.mode("overwrite").parquet(out)
-    val ckpt = ephemeralCheckpoint()
     val transformed = transform(boundedSource(spark, parquetPath))
-    val dsw = transformed.writeStream
-      .outputMode("complete")
-      .foreachBatch(write)
-      .trigger(Trigger.AvailableNow())
-    withStreamParts(spark, parquetPath) {
-      val q = ckpt.fold(dsw)(dsw.option("checkpointLocation", _)).start()
-      try q.awaitTermination()
-      finally ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
-    }
+    runBounded(spark, parquetPath,
+      transformed.writeStream
+        .outputMode("complete")
+        .foreachBatch(write)
+        .trigger(Trigger.AvailableNow()),
+      ephemeralCheckpoint())
     readSinkOrEmpty(spark, out, transformed.schema)
   }
 
-  /** Two-source APPEND-mode replay for stream-stream joins: each side gets
-    * its own file-stream instance over the same bounded source (two
-    * independent streams, as production would have two topics), the join's
-    * emitted rows accumulate in the memory sink. Complete mode is
-    * aggregation-only in Spark, so joins need this append variant. */
   /** Shared tail of the append-mode replays: a real parquet FILE sink (the
     * production shape for data-proportional emissions — join pairs and
     * per-event state outputs scale with the corpus, so a driver-side memory
@@ -310,20 +281,20 @@ object EventsAnomaly {
   private def runBoundedToFiles(spark: SparkSession, df: DataFrame,
       parquetPath: String): DataFrame = {
     val out = sinkDir(spark)
-    val ckpt = requiredCheckpoint()
-    withStreamParts(spark, parquetPath) {
-      val q = df.writeStream
+    runBounded(spark, parquetPath,
+      df.writeStream
         .format("parquet").option("path", out)
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally deleteRecursively(new java.io.File(ckpt))
-    }
+        .trigger(Trigger.AvailableNow()),
+      Some(requiredCheckpoint()))
     readSinkOrEmpty(spark, out, df.schema)
   }
 
+  /** Two-source APPEND-mode replay for stream-stream joins: each side gets
+    * its own file-stream instance over the same bounded source (two
+    * independent streams, as production would have two topics), the join's
+    * emitted rows accumulate in the file sink. Complete mode is
+    * aggregation-only in Spark, so joins need this append variant. */
   def replayBoundedJoin(spark: SparkSession, parquetPath: String,
       transform: (DataFrame, DataFrame) => DataFrame): DataFrame =
     runBoundedToFiles(spark,

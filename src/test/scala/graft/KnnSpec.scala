@@ -9,6 +9,32 @@ import org.apache.spark.sql.functions._
 class KnnSpec extends SparkSpec {
   import spark.implicits._
 
+  // Generators of the grid-geo corpora recorded in GEOSCALE_r06.json (the
+  // measuring main lives in git history). BaseN is the 1× point count.
+  private val BaseN = 15000L
+
+  /** Fixed-density spread corpus: n points hashed uniformly over a region
+    * whose WIDTH scales with n (height fixed 0.5°), so per-cell occupancy is
+    * scale-invariant. */
+  private def spread(n: Long) = {
+    val widthMicro = (600000L * n) / BaseN // 0.6° at 1×
+    spark.range(n).toDF("id")
+      .withColumn("x", lit(-74.3) +
+        (pmod(xxhash64(col("id"), lit(1)), lit(widthMicro)) / 1e6))
+      .withColumn("y", lit(40.5) +
+        (pmod(xxhash64(col("id"), lit(2)), lit(500000L)) / 1e6))
+  }
+
+  /** Coincident-mass corpus: 90% of points sit on 20 EXACT coordinates (the
+    * stuck-sensor / geocoding-default pathology), 10% spread at base extent. */
+  private def coincident(n: Long) = {
+    val heavy = pmod(xxhash64(col("id"), lit(3)), lit(10L)) < 9
+    val slot = pmod(xxhash64(col("id"), lit(4)), lit(20L))
+    spread(n).select(col("id"),
+      when(heavy, lit(-74.3) + slot * 0.03).otherwise(col("x")).as("x"),
+      when(heavy, lit(40.5) + slot * 0.02).otherwise(col("y")).as("y"))
+  }
+
   private def brute(pts: Seq[(Long, Double, Double)], k: Int): Set[(Long, Long, Int)] =
     pts.flatMap { case (a, ax, ay) =>
       pts.filter(_._1 != a)
@@ -40,7 +66,7 @@ class KnnSpec extends SparkSpec {
   }
 
   test("boundary-density corpus (E[nbrs per cell] ~ k) stays exact under escalation") {
-    // The GeoScaleEvidence failure shape: density tuned so the k-th neighbor
+    // The GEOSCALE_r06 failure shape: density tuned so the k-th neighbor
     // often lands just past one cell — ring 2 must absorb what ring 1 fails.
     val pts = (0L until 120L).map { i =>
       ((i, (i * 7919 % 113) / 40.0, (i * 104729 % 127) / 40.0))
@@ -59,7 +85,7 @@ class KnnSpec extends SparkSpec {
     // 45% of probes into the probes×corpus fallback (the measured
     // 41-s-at-15k-points trap); the data-derived cell must keep every probe
     // provable by ring 2.
-    val df = GeoScaleEvidence.coincident(spark, 2000L)
+    val df = coincident(2000L)
     val k = 5
     val cell = graft.ml.Knn.autoCellSize(df, k)
     assert(cell > 0.0 && cell.isFinite)

@@ -33,4 +33,15 @@ class SmokeSpec extends SparkSpec {
       s"\n${failures.size}/${SparkEntry.all.size} queries failed at sf0.001:\n" +
         failures.map { case (n, m) => s"  $n — $m" }.mkString("\n"))
   }
+
+  test("session carries the measured shuffle configs and leaves codec/initial width to Spark") {
+    val conf = spark.sparkContext.getConf
+    // serialized shuffle writer everywhere (BASELINE.md round 15)
+    assert(conf.get("spark.shuffle.sort.bypassMergeThreshold") == "0")
+    // bounded-buffer TypedImperative aggregates stay hash-based (round 14)
+    assert(spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "4096")
+    // lz4 and AQE's unset initial width stay Spark's defaults (round 12)
+    assert(!conf.contains("spark.io.compression.codec"))
+    assert(!conf.contains("spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
+  }
 }

@@ -1,14 +1,53 @@
 package graft
 
-import graft.StreamScaleEvidence.{Regime, slice}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Pins the StreamScaleEvidence corpus generator: the state-bound
-  * measurements in STREAMSCALE_r06.json are only evidence if the generator
-  * is deterministic, its slices tile disjoint event-time intervals (the
+/** The corpus generator behind STREAMSCALE_r06.json (the replay main that
+  * measured it lives in git history): time-ordered slices of a fixed
+  * event-time span, so the watermark advances between micro-batches when
+  * each slice is replayed as one file. Events are hash-placed uniformly
+  * inside their slice, event types split purchase/click/view 10/70/20,
+  * and ~2% duplicate event_ids exercise the dedup drop path. */
+object StreamScaleSpec {
+  val HoursPerFile = 24
+  val Users = 500L
+  val EpochStartMicros = 1700000000L * 1000000L // fixed, deterministic
+
+  final case class Regime(name: String, spanHours: Long, ratePerHour: Long) {
+    def files: Int = (spanHours / HoursPerFile).toInt
+    def totalEvents: Long = spanHours * ratePerHour
+  }
+
+  /** One time-slice of the corpus: events `[from, until)` of the id range,
+    * hash-placed uniformly inside the slice's event-time interval. */
+  def slice(s: SparkSession, r: Regime, i: Int): DataFrame = {
+    val perFile = r.totalEvents / r.files
+    val sliceMicros = HoursPerFile * 3600L * 1000000L
+    val t0 = EpochStartMicros + i.toLong * sliceMicros
+    s.range(i * perFile, (i + 1) * perFile).toDF("id")
+      // ~2% duplicate ids (same slice, different ts) for the dedup op.
+      .withColumn("event_id",
+        when(pmod(col("id"), lit(50L)) === 0, col("id") - 1).otherwise(col("id")))
+      .withColumn("ts",
+        timestamp_micros(lit(t0) + pmod(xxhash64(col("id"), lit(1)), lit(sliceMicros))))
+      .withColumn("user_id", pmod(xxhash64(col("id"), lit(2)), lit(Users)))
+      .withColumn("event_type",
+        when(pmod(xxhash64(col("id"), lit(3)), lit(10L)) === 0, lit("purchase"))
+          .when(pmod(xxhash64(col("id"), lit(3)), lit(10L)) < 8, lit("click"))
+          .otherwise(lit("view")))
+      .withColumn("ts_ns", unix_micros(col("ts")) * lit(1000L))
+      .select("event_id", "ts", "user_id", "event_type", "ts_ns")
+  }
+}
+
+/** Pins the streaming corpus generator: the state-bound measurements in
+  * STREAMSCALE_r06.json are only evidence if the generator is
+  * deterministic, its slices tile disjoint event-time intervals (the
   * watermark-advance mechanism), and the duplicate/type mixes are what the
-  * harness doc claims. */
+  * generator doc claims. */
 class StreamScaleSpec extends SparkSpec {
+  import StreamScaleSpec._
 
   private val r = Regime("spec", spanHours = 48L, ratePerHour = 500L)
 
@@ -28,9 +67,9 @@ class StreamScaleSpec extends SparkSpec {
         .head()
       (row.getLong(0), row.getLong(1))
     }
-    val sliceMicros = StreamScaleEvidence.HoursPerFile * 3600L * 1000000L
+    val sliceMicros = HoursPerFile * 3600L * 1000000L
     bounds.zipWithIndex.foreach { case ((lo, hi), i) =>
-      val t0 = StreamScaleEvidence.EpochStartMicros + i * sliceMicros
+      val t0 = EpochStartMicros + i * sliceMicros
       assert(lo >= t0 && hi < t0 + sliceMicros,
         s"slice $i [$lo,$hi] escapes its interval [$t0, ${t0 + sliceMicros})")
     }
@@ -62,7 +101,7 @@ class StreamScaleSpec extends SparkSpec {
     assert(math.abs(byType("purchase") / n - 0.1) < 0.02)
     assert(math.abs(byType("click") / n - 0.7) < 0.02)
     val users = df.agg(countDistinct("user_id"), max("user_id"), min("user_id")).head()
-    assert(users.getLong(0) <= StreamScaleEvidence.Users)
-    assert(users.getLong(1) < StreamScaleEvidence.Users && users.getLong(2) >= 0L)
+    assert(users.getLong(0) <= Users)
+    assert(users.getLong(1) < Users && users.getLong(2) >= 0L)
   }
 }

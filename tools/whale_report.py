@@ -46,7 +46,8 @@ def witness(path):
 
 def w15_replay_section(path="tmp/scale/w15_replay.jsonl"):
     """Fold the W15ReplayEvidence ladder (time-ordered multi-batch replay,
-    watermark-bounded join state) into the report — the measurement that
+    watermark-bounded join state; the main that wrote these records lives in
+    git history) into the report — the measurement that
     replaces the round-8 density-squared ARGUMENT for w15_stream_join.
     Re-runs append; per scale the MINIMUM-wall record wins (the whale
     warm-minima protocol: each line carries its own stage_ref/cpu_ref
